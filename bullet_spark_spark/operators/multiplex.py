@@ -6,17 +6,15 @@ FilterStreaming runs every live query's ``Querier(Mode.PARTITION)`` over each
 partition's records per batch (FilterStreaming.scala:54-67, QueryManager
 categorize :105-110), with the query list re-broadcast from the driver every
 batch (:48-53). Here the compiled predicate list is baked into the plan as a
-single projected array of (query_id, matched) structs; one ``explode`` emits
+single array of the query ids whose filter matches; one ``explode`` emits
 (query_id, record) pairs for matching queries only. Catalyst broadcasts the
 literals inside the codegen'd expression — no driver round-trip per batch.
 
-When to use which (SURVEY §7.3): plan-per-query (the default architecture)
-isolates lifecycle and lets Catalyst specialize each plan; the multiplexer
-wins when query cardinality is high enough that N source scans (or N
-streaming subscriptions) dominate — it pays one scan + one explode for all
-queries. Re-register to change the query set (streaming: restart the one
-multiplexer query; its state is keyed by query_id so a checkpoint resume
-keeps unrelated queries' state intact).
+:func:`route` builds that routing column. The streaming shared stage
+(``streaming.dynamic.DynamicMultiplexer``, which runs every live query in
+one routed-aggregation job per micro-batch) compiles it once per registry
+change; :func:`multiplex_filter` and :func:`multiplex_partials` apply it to
+a batch DataFrame.
 
 Scale: output volume is Σ per-query selectivity × input rows; the explode is
 map-side (no shuffle), and the per-query aggregation that follows shuffles by
@@ -29,62 +27,53 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bullet_spark_spark.functions.exprs import Expr
-from bullet_spark_spark.plans.spec import AggOp, GroupAgg
-from bullet_spark_spark.plans.compiler import _AGG_FN
+from bullet_spark_spark.functions.exprs import Expr, ExprSQLUnsupported
+from bullet_spark_spark.plans.spec import AggOp
 
 
-def multiplex_filter(df: DataFrame, predicates: dict[str, Expr]) -> DataFrame:
-    """One scan, N predicates → (query_id, record) rows for every query whose
-    filter matches. Output schema: ``query_id`` + all input columns."""
+def route(predicates: dict[str, Expr | None]) -> Column:
+    """Explode each row to the query ids whose filter it matches (a
+    ``None`` filter matches every row).
+
+    Fast path: render the whole routing expression as ONE SQL string
+    via the expression AST's ``sql()`` (a single F.expr py4j round
+    trip). Building it node-by-node through py4j costs ~0.24 s for 32
+    queries — pure driver latency paid on EVERY registry change, the
+    dominant term of the control plane's registry-churn cost (the
+    reference re-broadcasts hundreds of queries per batch; compile
+    latency IS the serving metric). Falls back to the per-node Column
+    path for filters with no SQL text form."""
+    try:
+        parts = []
+        for qid, pred in predicates.items():
+            if "'" in qid or "\\" in qid:
+                raise ExprSQLUnsupported("quote in query id")
+            cond = "true" if pred is None else pred.sql()
+            parts.append(f"if(coalesce(({cond}), false), '{qid}', null)")
+        return F.explode(F.expr(f"array_compact(array({', '.join(parts)}))"))
+    except ExprSQLUnsupported:
+        pass
     tagged = F.array(
         *[
             F.struct(
                 F.lit(qid).alias("qid"),
-                (p.col() if p is not None else F.lit(True)).alias("m"),
+                (pred.col() if pred is not None else F.lit(True)).alias("m"),
             )
-            for qid, p in predicates.items()
+            for qid, pred in predicates.items()
         ]
     )
-    matches = F.filter(tagged, lambda s: F.coalesce(s["m"], F.lit(False)))
-    return (
-        df.withColumn("__q", F.explode(F.transform(matches, lambda s: s["qid"])))
-        .select(F.col("__q").alias("query_id"), "*")
-        .drop("__q")
-    )
-
-
-def multiplex_group_count(
-    df: DataFrame, queries: dict[str, tuple[Expr | None, GroupAgg]]
-) -> DataFrame:
-    """One pass for N (filter, GROUP BY count) queries sharing a source:
-    multiplexed filter, then a single aggregation keyed by
-    (query_id, group-key tuple). All queries' groups shuffle together —
-    one exchange total instead of N.
-
-    Output: (query_id, keys: map<string,string>, cnt). Keys are stringified
-    into a map because different queries group by different columns."""
-    preds = {qid: p for qid, (p, _) in queries.items()}
-    routed = multiplex_filter(df, preds)
-    # per-query group-key tuple, stringified: CASE over query_id
-    key_expr = None
-    for qid, (_, agg) in queries.items():
-        arr_k = F.array(*[F.lit(k) for k in agg.fields])
-        arr_v = F.array(*[F.col(k).cast("string") for k in agg.fields])
-        branch = F.map_from_arrays(arr_k, arr_v)
-        key_expr = (
-            F.when(F.col("query_id") == qid, branch)
-            if key_expr is None
-            else key_expr.when(F.col("query_id") == qid, branch)
-        )
-    return (
-        routed.withColumn("keys", key_expr)
-        .groupBy("query_id", F.map_entries("keys").alias("key_entries"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "query_id", F.map_from_entries("key_entries").alias("keys"), "cnt"
+    return F.explode(
+        F.transform(
+            F.filter(tagged, lambda s: F.coalesce(s["m"], F.lit(False))),
+            lambda s: s["qid"],
         )
     )
+
+
+def multiplex_filter(df: DataFrame, predicates: dict[str, Expr | None]) -> DataFrame:
+    """One scan, N predicates → (query_id, record) rows for every query whose
+    filter matches. Output schema: ``query_id`` + all input columns."""
+    return df.select(route(predicates).alias("query_id"), "*")
 
 
 def multiplex_partials(df: DataFrame, specs: dict[str, "Query"]) -> DataFrame:
@@ -116,18 +105,22 @@ def multiplex_partials(df: DataFrame, specs: dict[str, "Query"]) -> DataFrame:
     columns); aggregate columns keep their NATIVE types (sums of longs stay
     long — no lossy double coercion). Output:
     (query_id, keys map<string,string>, count_, [sum_f / min_f / max_f /
-    cntf_f ...]) with one column per (op, field) pair any query needs."""
+    cntf_f / hll_f ...]) with one column per (op, field) pair any query
+    needs."""
     from bullet_spark_spark.plans.spec import (
         CountDistinctAgg,
         DistributionAgg,
         DistributionType,
-        GroupAgg as _GroupAgg,
+        GroupAgg,
         TopKAgg,
     )
 
     routed = multiplex_filter(df, {qid: s.filter for qid, s in specs.items()})
 
     key_expr = None
+    # union of partial-aggregate columns the spec set needs, keyed by a
+    # stable column name; native output types (no casts)
+    partials: dict[str, Column] = {"count_": F.count(F.lit(1))}
     for qid, spec in specs.items():
         agg = spec.aggregation
         if isinstance(agg, CountDistinctAgg) and agg.approx:
@@ -135,7 +128,16 @@ def multiplex_partials(df: DataFrame, specs: dict[str, "Query"]) -> DataFrame:
             # group per query (empty key map), one blob partial per batch
             empty = F.array().cast("array<string>")
             branch = F.map_from_arrays(empty, empty)
-        elif isinstance(agg, (_GroupAgg, TopKAgg, CountDistinctAgg)):
+            # DataSketches-compatible HLL blob partial (hll_union_agg
+            # re-merges it — the byte-blob combine contract); a NULL in any
+            # tuple component voids the row, matching exact CD's convention
+            key = F.concat_ws(
+                "\x1f", *[F.col(cc).cast("string") for cc in agg.fields]
+            )
+            for cc in agg.fields:
+                key = F.when(F.col(cc).isNotNull(), key)
+            partials["hll_" + "_".join(agg.fields)] = F.hll_sketch_agg(key, F.lit(12))
+        elif isinstance(agg, (GroupAgg, TopKAgg, CountDistinctAgg)):
             # CountDistinct reuses the group-key map: each distinct field
             # tuple becomes one partial row; NULL components stay visible
             # as NULL map values so the merge can apply SQL's
@@ -175,64 +177,33 @@ def multiplex_partials(df: DataFrame, specs: dict[str, "Query"]) -> DataFrame:
             if key_expr is None
             else key_expr.when(F.col("query_id") == qid, branch)
         )
-
-    return (
-        routed.withColumn("keys", key_expr)
-        .groupBy("query_id", F.map_entries("keys").alias("key_entries"))
-        .agg(
-            *[
-                col.alias(name)
-                for name, col in partial_agg_columns(specs.values()).items()
-            ]
-        )
-        .withColumn("keys", F.map_from_entries("key_entries"))
-        .drop("key_entries")
-    )
-
-
-def partial_agg_columns(specs) -> dict[str, Column]:
-    """Union of mergeable partial-aggregate columns the spec set needs,
-    keyed by a stable column name. Native output types (no casts)."""
-    from bullet_spark_spark.plans.spec import (
-        CountDistinctAgg as _CD,
-        GroupAgg as _GroupAgg,
-    )
-
-    cols: dict[str, Column] = {"count_": F.count(F.lit(1))}
-    for spec in specs:
-        agg = spec.aggregation
-        if isinstance(agg, _CD) and agg.approx:
-            # DataSketches-compatible HLL blob partial (hll_union_agg
-            # re-merges it — the byte-blob combine contract); a NULL in any
-            # tuple component voids the row, matching exact CD's convention
-            name = "hll_" + "_".join(agg.fields)
-            key = F.concat_ws(
-                "\x1f", *[F.col(cc).cast("string") for cc in agg.fields]
-            )
-            for cc in agg.fields:
-                key = F.when(F.col(cc).isNotNull(), key)
-            cols[name] = F.hll_sketch_agg(key, F.lit(12))
-            continue
-        if not isinstance(agg, _GroupAgg):
-            continue  # TopK / Distribution partials are just count_
+        if not isinstance(agg, GroupAgg):
+            continue  # TopK / Distribution / exact CD partials are just count_
         for op, fld, _out in agg.operations:
             if op is AggOp.COUNT:
                 continue
             if op is AggOp.COUNT_FIELD:
-                cols[f"cntf_{fld}"] = F.count(F.col(fld))
+                partials[f"cntf_{fld}"] = F.count(F.col(fld))
             elif op is AggOp.SUM:
-                cols[f"sum_{fld}"] = F.sum(F.col(fld))
+                partials[f"sum_{fld}"] = F.sum(F.col(fld))
             elif op is AggOp.MIN:
-                cols[f"min_{fld}"] = F.min(F.col(fld))
+                partials[f"min_{fld}"] = F.min(F.col(fld))
             elif op is AggOp.MAX:
-                cols[f"max_{fld}"] = F.max(F.col(fld))
+                partials[f"max_{fld}"] = F.max(F.col(fld))
             elif op is AggOp.AVG:
                 # decomposed into mergeable partials; avg = sum/cnt at merge
-                cols[f"sum_{fld}"] = F.sum(F.col(fld))
-                cols[f"cntf_{fld}"] = F.count(F.col(fld))
+                partials[f"sum_{fld}"] = F.sum(F.col(fld))
+                partials[f"cntf_{fld}"] = F.count(F.col(fld))
             else:
                 raise ValueError(
                     f"{op} partials are not mergeable across batches — "
                     "use register() for this query"
                 )
-    return cols
+
+    return (
+        routed.withColumn("keys", key_expr)
+        .groupBy("query_id", F.map_entries("keys").alias("key_entries"))
+        .agg(*[col.alias(name) for name, col in partials.items()])
+        .withColumn("keys", F.map_from_entries("key_entries"))
+        .drop("key_entries")
+    )

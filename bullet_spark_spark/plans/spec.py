@@ -110,7 +110,8 @@ class DistributionAgg:
     # partials are per-bucket counts with LINEAR buckets floor(value/width)
     # (operators.sketch.hist_group_sketches semantics — engine-portable,
     # estimates within one width of exact). Required when a QUANTILE spec
-    # goes through register_multiplexed; ignored elsewhere.
+    # runs on the dynamic multiplexer (the control plane fills it from a
+    # message's ``quantile_width``); ignored elsewhere.
     width: float | None = None
 
 

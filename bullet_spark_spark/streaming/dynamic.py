@@ -10,23 +10,21 @@ between batches with no stage restart. Partial results merge into per-query
 driver state (counts/sums/mins/maxs are trivially mergeable, exactly the
 partial-aggregation contract the reference's byte blobs carried).
 
-Trade-offs vs the other two modes (all three are supported — SURVEY §7.0):
-- plan-per-query (EngineRuntime.register): maximal Catalyst specialization,
-  isolated lifecycle; N source subscriptions.
-- static multiplexer (register_multiplexed): one scan, one shuffle for all
-  queries; query set fixed per incarnation.
-- dynamic multiplexer (this): one scan, per-batch spec evaluation, fully
-  dynamic registry; driver-side final merge (fine for bullet-sized bounded
-  results, which is the reference's own constraint — results return
-  through a message bus). ALL live queries run as ONE routed-aggregation
-  job per batch: each row explodes to the query ids whose filter it
-  matches (the static multiplexer's routing), then a single aggregation
-  keyed by (query_id, group keys) computes the UNION of (op, field) pairs
-  any query needs — aggregate state per group is #distinct-(op,field)
-  pairs, not #queries × ops; distinct group-by field sets become GROUPING
-  SETS over (query_id, union of fields). One scan + one shuffle per batch
-  regardless of query or field-set count, and the compiled Column tree is
-  cached across batches while the registry is unchanged.
+This is the engine's one shared stage; plan-per-query
+(``EngineRuntime.register``) is the other streaming engine and keeps
+maximal Catalyst specialization and isolated lifecycle at the cost of N
+source subscriptions. Here the registry is fully dynamic and the final
+merge is driver-side (fine for bullet-sized bounded results, which is the
+reference's own constraint — results return through a message bus). ALL
+live queries run as ONE routed-aggregation job per batch: each row
+explodes to the query ids whose filter it matches
+(``operators.multiplex.route``), then a single aggregation keyed by
+(query_id, group keys) computes the UNION of (op, field) pairs any query
+needs — aggregate state per group is #distinct-(op,field) pairs, not
+#queries × ops; distinct group-by field sets become GROUPING SETS over
+(query_id, union of fields). One scan + one shuffle per batch regardless
+of query or field-set count, and the compiled Column tree is cached across
+batches while the registry is unchanged.
 """
 
 from __future__ import annotations
@@ -39,7 +37,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bullet_spark_spark.functions.exprs import Expr
+from bullet_spark_spark.operators.multiplex import route
 from bullet_spark_spark.plans.spec import (
     AggOp,
     CountDistinctAgg,
@@ -201,7 +199,7 @@ class DynamicHandle:
 class DynamicMultiplexer:
     """Per-batch query evaluation over one shared stream (add/remove live).
 
-    SINGLE-TENANT-SESSION ASSUMPTION: ``_evaluate_batch`` temporarily sets
+    SINGLE-TENANT-SESSION ASSUMPTION: ``_process_batch`` temporarily sets
     session-global SQL confs (shuffle.partitions, AQE, constraint
     propagation — restored in a ``finally``) for the duration of each
     micro-batch, because the batch's ``foreachBatch`` DataFrame is bound to
@@ -281,10 +279,10 @@ class DynamicMultiplexer:
             raise ValueError(
                 f"{type(agg).__name__} is not dynamically multiplexable"
             )
-        # NOTE: shared-stage RAW emits FULL records (same as the static
-        # multiplexer's routed take); a RAW projection applies in
-        # plan-per-query mode (EngineRuntime.register), where the compiled
-        # plan owns the select list.
+        # NOTE: shared-stage RAW emits FULL records (the routed take); a
+        # RAW projection applies in plan-per-query mode
+        # (EngineRuntime.register), where the compiled plan owns the select
+        # list.
         handle = DynamicHandle(
             query_id=query_id,
             spec=spec,
@@ -388,56 +386,10 @@ class DynamicMultiplexer:
             self._compile_raw(raw_live) if raw_live else None,
         )
 
-    @staticmethod
-    def _route_col(members: list[tuple["DynamicHandle", Query]]):
-        """Explode each row to the query ids whose filter it matches
-        (operators.multiplex.multiplex_filter's expression, prebuilt once).
-
-        Fast path: render the whole routing expression as ONE SQL string
-        via the expression AST's ``sql()`` (a single F.expr py4j round
-        trip). Building it node-by-node through py4j costs ~0.24 s for 32
-        queries — pure driver latency paid on EVERY registry change, the
-        dominant term of the control plane's registry-churn cost (the
-        reference re-broadcasts hundreds of queries per batch; compile
-        latency IS the serving metric). Falls back to the per-node Column
-        path for filters with no SQL text form."""
-        from bullet_spark_spark.functions.exprs import ExprSQLUnsupported
-
-        try:
-            parts = []
-            for h, spec in members:
-                if "'" in h.query_id or "\\" in h.query_id:
-                    raise ExprSQLUnsupported("quote in query id")
-                pred = "true" if spec.filter is None else spec.filter.sql()
-                parts.append(
-                    f"if(coalesce(({pred}), false), '{h.query_id}', null)"
-                )
-            return F.explode(F.expr(f"array_compact(array({', '.join(parts)}))"))
-        except ExprSQLUnsupported:
-            pass
-        tagged = F.array(
-            *[
-                F.struct(
-                    F.lit(h.query_id).alias("qid"),
-                    (
-                        spec.filter.col() if spec.filter is not None else F.lit(True)
-                    ).alias("m"),
-                )
-                for h, spec in members
-            ]
-        )
-        return F.explode(
-            F.transform(
-                F.filter(tagged, lambda s: F.coalesce(s["m"], F.lit(False))),
-                lambda s: s["qid"],
-            )
-        )
-
     def _compile_agg(self, live: list[tuple["DynamicHandle", Query]]) -> tuple:
-        """The shared routed-aggregation plan (the static multiplexer's
-        routing applied dynamically): each row EXPLODES to its matching
-        query ids, then ONE aggregation groups by (query_id, group keys)
-        computing the UNION of (op, field) pairs any live query needs —
+        """The shared routed-aggregation plan: each row EXPLODES to its
+        matching query ids, then ONE aggregation groups by (query_id, group
+        keys) computing the UNION of (op, field) pairs any live query needs —
         aggregate state per group is #distinct-(op,field) pairs, not
         #queries × ops. Distinct group-by field sets become GROUPING SETS
         over (query_id, union of fields); a row routed to a query exists in
@@ -503,7 +455,7 @@ class DynamicMultiplexer:
                     all_fields.append(f)
         n = len(all_fields)
 
-        route_col = self._route_col(live)
+        route_col = route({h.query_id: s.filter for h, s in live})
 
         # union of aggregate columns any query needs, computed once each;
         # AVG decomposes into its mergeable SUM + COUNT_FIELD partials
@@ -582,7 +534,7 @@ class DynamicMultiplexer:
         filters; per batch the live remainder caps each query's take
         (bullet Q16 — a RAW query completes at its limit)."""
         return (
-            self._route_col(live),
+            route({h.query_id: s.filter for h, s in live}),
             {h.query_id: h for h, _ in live},
             {h.query_id: s.aggregation.limit for h, s in live},
         )

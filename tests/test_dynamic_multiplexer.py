@@ -55,8 +55,8 @@ def test_dynamic_full_op_set(spark, tables, tmp_path):
     """The dynamic (mid-stream-mutation) mode now multiplexes EVERY query
     family — GroupAgg + TopK + exact CountDistinct + Distribution
     (PMF/CDF/QUANTILE-with-width) + RAW — in one routed job per batch,
-    matching the static multiplexer's coverage and the reference's
-    every-type filter stage (FilterStreaming.scala:54-67)."""
+    matching the reference's every-type filter stage
+    (FilterStreaming.scala:54-67)."""
     import math
 
     from bullet_spark_spark.plans.spec import (

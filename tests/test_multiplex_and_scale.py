@@ -5,30 +5,36 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from bullet_spark_spark.functions.exprs import E
-from bullet_spark_spark.operators.multiplex import multiplex_filter, multiplex_group_count
+from bullet_spark_spark.operators.multiplex import multiplex_filter, multiplex_partials, route
 from bullet_spark_spark.operators.relational import salted_group_agg
 from bullet_spark_spark.plans.spec import AggOp, GroupAgg, Query
 from bullet_spark_spark.sources.streaming import file_drip
 from bullet_spark_spark.streaming import EngineRuntime, QueryState
+from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 
 
-def test_multiplex_filter_matches_individual(spark, tables):
+@pytest.mark.parametrize("suffix", ["", "'"], ids=["sql_fast_path", "per_node_fallback"])
+def test_multiplex_filter_matches_individual(spark, tables, suffix):
+    """Both routing builds give the same counts: the one-string SQL fast
+    path, and the per-node Column path a quote in a query id forces."""
     ev = tables["events"]
     preds = {
-        "q_hi": E.f("value") > 90,
-        "q_purchase": E.f("event_type") == "purchase",
-        "q_all": None,
-        "q_none": E.f("value") > 1000,
+        "q_hi" + suffix: E.f("value") > 90,
+        "q_purchase" + suffix: E.f("event_type") == "purchase",
+        "q_all" + suffix: None,
+        "q_none" + suffix: E.f("value") > 1000,
     }
+    assert ("array_compact" in str(route(preds))) == (suffix == "")
     routed = multiplex_filter(ev, preds)
     counts = {r["query_id"]: r["n"] for r in routed.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts.get("q_hi") == ev.filter(F.col("value") > 90).count()
-    assert counts.get("q_purchase") == ev.filter(F.col("event_type") == "purchase").count()
-    assert counts.get("q_all") == ev.count()
-    assert "q_none" not in counts
+    assert counts.get("q_hi" + suffix) == ev.filter(F.col("value") > 90).count()
+    assert counts.get("q_purchase" + suffix) == ev.filter(F.col("event_type") == "purchase").count()
+    assert counts.get("q_all" + suffix) == ev.count()
+    assert "q_none" + suffix not in counts
 
 
 def test_multiplex_single_scan(spark, tables):
@@ -39,17 +45,20 @@ def test_multiplex_single_scan(spark, tables):
     assert plan.count("Scan parquet") <= 1
 
 
-def test_multiplex_group_count(spark, tables):
+def test_multiplex_partials_group_count(spark, tables):
     ev = tables["events"]
-    out = multiplex_group_count(
+    out = multiplex_partials(
         ev,
         {
-            "by_type": (E.f("value") > 50, GroupAgg(fields=["event_type"])),
-            "by_user_mod": (None, GroupAgg(fields=["user_id"])),
+            "by_type": Query(
+                source="events", filter=E.f("value") > 50,
+                aggregation=GroupAgg(fields=["event_type"]),
+            ),
+            "by_user_mod": Query(source="events", aggregation=GroupAgg(fields=["user_id"])),
         },
     )
     rows = out.collect()
-    by_type = {r["keys"]["event_type"]: r["cnt"] for r in rows if r["query_id"] == "by_type"}
+    by_type = {r["keys"]["event_type"]: r["count_"] for r in rows if r["query_id"] == "by_type"}
     expected = {
         r["event_type"]: r["n"]
         for r in ev.filter(F.col("value") > 50).groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -173,7 +182,7 @@ def test_concurrent_queries_shared_source(spark, tables, tmp_path):
 def test_streaming_multiplexer(spark, tables, tmp_path):
     """N queries, ONE streaming stage (the reference's FilterStreaming role):
     results route to per-query handles and match per-query batch answers."""
-    rt = EngineRuntime(spark)
+    mux = DynamicMultiplexer(spark)
     try:
         stream = file_drip(spark, tables["events"], str(tmp_path), chunks=4)
         specs = {
@@ -188,16 +197,14 @@ def test_streaming_multiplexer(spark, tables, tmp_path):
                 aggregation=GroupAgg(fields=[]),
             ),
         }
-        handles = rt.register_multiplexed(
-            specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-        )
+        handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+        mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
         assert all(h.state.value == "COMPLETED" for h in handles.values())
 
-        # last emission per key-tuple wins (update mode)
+        # partials merged across batches: one row per key tuple
         final = {}
-        for batch in handles["hi_by_type"].sink.batches:
-            for keys, cnt in batch:
-                final[keys.get("event_type")] = cnt
+        for event_type, cnt in handles["hi_by_type"].result():
+            final[event_type] = cnt
         expected = {
             r["event_type"]: r["n"]
             for r in tables["events"]
@@ -208,19 +215,19 @@ def test_streaming_multiplexer(spark, tables, tmp_path):
         }
         assert final == expected
 
-        p_final = handles["purchases"].final_result()
+        p_final = handles["purchases"].result()
         n_purchases = tables["events"].filter(F.col("event_type") == "purchase").count()
-        assert p_final[-1][1] == n_purchases
+        assert p_final[-1][0] == n_purchases
     finally:
-        rt.stop_all()
+        mux.stop()
 
 
 def test_streaming_multiplexer_with_ops(spark, tables, tmp_path):
-    """Static multiplexer with heterogeneous op lists: each handle receives
+    """Shared stage with heterogeneous op lists: each handle receives
     exactly its spec's outputs, computed in the one shared aggregation."""
     from bullet_spark_spark.plans.spec import AggOp
 
-    rt = EngineRuntime(spark)
+    mux = DynamicMultiplexer(spark)
     try:
         stream = file_drip(spark, tables["events"], str(tmp_path), chunks=3)
         specs = {
@@ -237,14 +244,14 @@ def test_streaming_multiplexer_with_ops(spark, tables, tmp_path):
                 aggregation=GroupAgg(fields=[], operations=[(AggOp.COUNT, None, "n")]),
             ),
         }
-        handles = rt.register_multiplexed(
-            specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-        )
-        assert handles["sum_by_type"].sink.columns == ["keys", "sv", "mx"]
+        handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+        mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
+        # (event_type, sv, mx): the one key, then exactly the spec's two ops
+        rows = handles["sum_by_type"].result()
+        assert {len(r) for r in rows} == {3}
         final = {}
-        for batch in handles["sum_by_type"].sink.batches:
-            for keys, sv, mx in batch:
-                final[keys["event_type"]] = (sv, mx)
+        for event_type, sv, mx in rows:
+            final[event_type] = (sv, mx)
         expected = {
             r["event_type"]: (r["sv"], r["mx"])
             for r in tables["events"]
@@ -257,32 +264,33 @@ def test_streaming_multiplexer_with_ops(spark, tables, tmp_path):
             assert abs(final[k][0] - expected[k][0]) < 1e-6
             assert final[k][1] == expected[k][1]
         n_hi = tables["events"].filter(F.col("value") > 80).count()
-        assert handles["cnt_hi"].final_result()[-1][1] == n_hi
+        assert handles["cnt_hi"].result()[-1][0] == n_hi
     finally:
-        rt.stop_all()
+        mux.stop()
 
 
 def test_multiplexer_kill_is_sink_side(spark, tables, tmp_path):
     """Killing one multiplexed query must not stop the shared stage."""
-    rt = EngineRuntime(spark)
+    mux = DynamicMultiplexer(spark)
     try:
         stream = file_drip(spark, tables["events"], str(tmp_path), chunks=8)
         specs = {
             "a": Query(source="events", aggregation=GroupAgg(fields=["event_type"])),
             "b": Query(source="events", aggregation=GroupAgg(fields=[])),
         }
-        handles = rt.register_multiplexed(specs, stream, trigger_ms=150)
-        rt.kill("a")
+        handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+        mux.start(stream, trigger_ms=150)
+        mux.kill("a")
         assert handles["a"].state.value == "KILLED"
-        assert handles["b"].is_active()
-        assert handles["b"].stream.isActive  # shared stage survives
+        assert handles["b"].state is QueryState.RUNNING
+        assert mux._stream.isActive  # shared stage survives
         deadline = time.time() + 60
-        while not handles["b"].sink.batches and time.time() < deadline:
+        while not handles["b"].result() and time.time() < deadline:
             time.sleep(0.2)
-        assert handles["b"].sink.batches  # b still receives results
-        assert not handles["a"].sink.batches or handles["a"].state.value == "KILLED"
+        assert handles["b"].result()  # b still receives results
+        assert not handles["a"].result() or handles["a"].state.value == "KILLED"
     finally:
-        rt.stop_all()
+        mux.stop()
 
 
 def test_bucketed_join_no_shuffle(spark, tables, tmp_path):
@@ -379,7 +387,7 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
         TopKAgg,
     )
 
-    rt = EngineRuntime(spark)
+    mux = DynamicMultiplexer(spark)
     try:
         ev = tables["events"]
         stream = file_drip(spark, ev, str(tmp_path), chunks=4)
@@ -427,9 +435,8 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
                 ),
             ),
         }
-        handles = rt.register_multiplexed(
-            specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-        )
+        handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+        mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
         assert all(h.state.value == "COMPLETED" for h in handles.values())
 
         # GroupAgg vs batch
@@ -444,8 +451,8 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
             .collect()
         }
         got = {
-            keys["event_type"]: (cnt, sv, av, mn)
-            for keys, cnt, sv, av, mn in handles["grp"].sink.batches[-1]
+            event_type: (cnt, sv, av, mn)
+            for event_type, cnt, sv, av, mn in handles["grp"].result()
         }
         assert set(got) == set(exp)
         for k in exp:
@@ -459,7 +466,7 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
             for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
             .orderBy(F.col("cnt").desc(), F.col("event_type")).limit(3).collect()
         ]
-        got_topk = [(k["event_type"], c) for k, c in handles["topk"].sink.batches[-1]]
+        got_topk = [(k, c) for k, c in handles["topk"].result()]
         assert got_topk == exp_topk
 
         # CDF vs compiled batch plan
@@ -469,7 +476,7 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
             (r["bucket"], r["cum_count"])
             for r in compile_query(spark, specs["cdf"]).collect()
         ]
-        assert handles["cdf"].sink.batches[-1] == exp_cdf
+        assert handles["cdf"].result() == exp_cdf
 
         # RAW vs batch filter
         exp_raw = sorted(
@@ -477,8 +484,8 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
             for r in ev.filter((F.col("value") > 99) & (F.col("event_type") == "error"))
             .select("event_id").collect()
         )
-        idx = handles["raw"].sink.columns.index("event_id")
-        got_raw = sorted(r[idx] for r in handles["raw"].sink.rows)
+        idx = handles["raw"].raw_columns.index("event_id")
+        got_raw = sorted(r[idx] for r in handles["raw"].result())
         assert got_raw == exp_raw
 
         # COUNT DISTINCT vs batch exact
@@ -487,7 +494,7 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
             .select("user_id").distinct().filter(F.col("user_id").isNotNull())
             .count()
         )
-        assert handles["cd"].sink.batches[-1] == [(exp_cd,)]
+        assert handles["cd"].result() == [(exp_cd,)]
 
         # QUANTILE vs batch-side linear-histogram targeted rank
         import math
@@ -509,42 +516,44 @@ def test_multiplexer_full_op_set(spark, tables, tmp_path):
                 if run >= rank:
                     exp_q.append((p, (b + 0.5) * 5.0))
                     break
-        assert handles["qnt"].sink.batches[-1] == exp_q
+        assert handles["qnt"].result() == exp_q
     finally:
-        rt.stop_all()
+        mux.stop()
 
 
 def test_multiplexer_raw_limit_completes(spark, tables, tmp_path):
-    """A multiplexed RAW query stops at its limit and is marked COMPLETED by
-    the sweeper without stopping the shared stage."""
+    """A multiplexed RAW query stops at its limit and is marked COMPLETED
+    without stopping the shared stage."""
     from bullet_spark_spark.plans.spec import RawAgg
 
-    rt = EngineRuntime(spark, sweep_interval_s=0.3)
+    mux = DynamicMultiplexer(spark)
     try:
         stream = file_drip(spark, tables["events"], str(tmp_path), chunks=8)
         specs = {
             "raw5": Query(source="events", aggregation=RawAgg(limit=5)),
             "grp": Query(source="events", aggregation=GroupAgg(fields=["event_type"])),
         }
-        handles = rt.register_multiplexed(specs, stream, trigger_ms=150)
+        handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+        mux.start(stream, trigger_ms=150)
         deadline = time.time() + 60
         while handles["raw5"].state is QueryState.RUNNING and time.time() < deadline:
             time.sleep(0.2)
         assert handles["raw5"].state is QueryState.COMPLETED
-        assert len(handles["raw5"].sink.rows) == 5
-        assert handles["grp"].is_active()  # shared stage survives
+        assert len(handles["raw5"].result()) == 5
+        assert handles["grp"].state is QueryState.RUNNING
+        assert mux._stream.isActive  # shared stage survives
     finally:
-        rt.stop_all()
+        mux.stop()
 
 
 def test_multiplexer_rate_limit_fail(spark, tables, tmp_path):
-    """W9 on the static multiplexer: a query exceeding the stage's emit
-    budget is FAILed by the sweeper (error → FAIL signal for that handle) —
-    two-stage rate enforcement parity (FilterStreaming.scala:129-133,
+    """W9 on the shared stage: a query exceeding the stage's emit budget is
+    FAILed (error → FAIL signal for that handle) — two-stage rate
+    enforcement parity (FilterStreaming.scala:129-133,
     JoinStreaming.scala:152-159)."""
     from bullet_spark_spark.streaming.runtime import RateLimit, Signal
 
-    rt = EngineRuntime(spark, sweep_interval_s=0.3)
+    mux = DynamicMultiplexer(spark, rate_limit=RateLimit(max_emits=2, interval_ms=60_000))
     try:
         stream = file_drip(spark, tables["events"], str(tmp_path), chunks=8)
         specs = {
@@ -554,38 +563,33 @@ def test_multiplexer_rate_limit_fail(spark, tables, tmp_path):
             ),
             "grp": Query(source="events", aggregation=GroupAgg(fields=[])),
         }
-        handles = rt.register_multiplexed(
-            specs,
-            stream,
-            trigger_ms=100,
-            rate_limit=RateLimit(max_emits=2, interval_ms=60_000),
-        )
+        handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+        mux.start(stream, trigger_ms=100)
         deadline = time.time() + 60
         while handles["throttled"].state is QueryState.RUNNING and time.time() < deadline:
             time.sleep(0.2)
         assert handles["throttled"].state is QueryState.FAILED
         assert "rate limit" in (handles["throttled"].error or "")
         assert ("throttled", Signal.FAIL) in [
-            (q, s) for q, s, _ in rt.status_log
+            (q, s) for q, s, _ in mux.status_log
         ]
     finally:
-        rt.stop_all()
+        mux.stop()
 
 
 def test_multiplexed_approx_count_distinct(spark, tables, tmp_path):
-    """Approx COUNT DISTINCT in the STATIC multiplexer: one HLL blob per
-    batch rides the shared partial aggregation (empty key map — the
-    query's state is the blob, not the key set), blobs append across
-    batches, one hll_union_agg job finalizes. Sparse-mode HLL is exact at
+    """Approx COUNT DISTINCT in the shared stage: one HLL blob per batch
+    rides the shared aggregation (empty key tuple — the query's state is
+    the blob, not the key set), blobs append across batches, one
+    hll_union_agg job finalizes. Sparse-mode HLL is exact at
     the fixture's cardinality, so the estimate must equal the exact-CD
     answer running alongside in the same shared stage."""
     from bullet_spark_spark.functions.exprs import E
     from bullet_spark_spark.plans.spec import CountDistinctAgg, GroupAgg, Query
     from bullet_spark_spark.sources.streaming import file_drip
-    from bullet_spark_spark.streaming import EngineRuntime
 
     ev = tables["events"]
-    rt = EngineRuntime(spark)
+    mux = DynamicMultiplexer(spark)
     specs = {
         "acd": Query(
             source="events",
@@ -605,13 +609,12 @@ def test_multiplexed_approx_count_distinct(spark, tables, tmp_path):
         ),
     }
     stream = file_drip(spark, ev, str(tmp_path), chunks=4)
-    handles = rt.register_multiplexed(
-        specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-    )
-    rt.stop_all()
+    handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+    mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
+    mux.stop()
 
     exact = ev.filter(F.col("value") > 50).select("user_id").distinct().count()
-    final_ecd = handles["ecd"].sink.batches[-1]
-    final_acd = handles["acd"].sink.batches[-1]
+    final_ecd = handles["ecd"].result()
+    final_acd = handles["acd"].result()
     assert final_ecd == [(exact,)]
     assert final_acd == [(exact,)]

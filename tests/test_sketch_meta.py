@@ -20,7 +20,6 @@ from bullet_spark_spark.operators.sketch import HLL_DEFAULT_LGK, hll_result_meta
 from bullet_spark_spark.plans.spec import AggOp, CountDistinctAgg, GroupAgg, Query
 from bullet_spark_spark.sources.streaming import file_drip
 from bullet_spark_spark.sql import bql_result
-from bullet_spark_spark.streaming import EngineRuntime
 from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 
 
@@ -84,7 +83,7 @@ def test_dynamic_mux_approx_cd_carries_meta(spark, tables, tmp_path):
 
 def test_static_mux_approx_cd_carries_meta(spark, tables, tmp_path):
     ev = tables["events"]
-    rt = EngineRuntime(spark)
+    mux = DynamicMultiplexer(spark)
     specs = {
         "acd": Query(
             source="events",
@@ -99,14 +98,14 @@ def test_static_mux_approx_cd_carries_meta(spark, tables, tmp_path):
         ),
     }
     stream = file_drip(spark, ev, str(tmp_path), chunks=2)
-    handles = rt.register_multiplexed(
-        specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-    )
-    rt.stop_all()
+    handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+    mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
+    mux.stop()
     exact = ev.filter(F.col("value") > 50).select("user_id").distinct().count()
-    (est,) = handles["acd"].sink.batches[-1][0]
+    (est,) = handles["acd"].result()[0]
     _check_meta(handles["acd"].meta, exact)
     assert handles["acd"].meta["estimate"] == est
+    handles["g"].result()
     assert handles["g"].meta is None  # exact aggregation: no sketch meta
 
 
